@@ -2,25 +2,37 @@
 a dedup pipeline (near-dup PAIRS -> duplicate GROUPS -> one keeper per
 group).
 
-Spark-first iterative design (no GraphFrames dependency):
+Spark-first iterative design (no GraphFrames dependency), hash-to-min with
+pointer jumping over the CLOSED neighbourhood N[u] = {u} + pair partners:
 
-- labels start as each node's own id; every round each node takes the min
-  label over itself and its neighbors (one shuffle join + groupBy), then a
-  pointer-jump round (label := label(label)) doubles propagation distance,
-  giving O(log diameter) convergence on chain-shaped clusters instead of
+- labels start as each node's own id, so the first step is a plain
+  `groupBy(u).min(v)` over N[u] — no join. Every step is followed by a
+  pointer jump (label := label(label)), doubling the propagation
+  distance: O(log diameter) rounds on chain-shaped clusters instead of
   O(diameter).
-- every round ends in `localCheckpoint` — iterative plans otherwise grow a
-  lineage Catalyst re-analyzes each round (planning cost explodes by ~10
-  rounds) and re-executes from the source on failure.
-- convergence is detected with a count of changed labels (one extra action
-  per round, on the already-checkpointed frame).
+- every later step is ONE join of N[u] against the labels plus ONE
+  aggregate computing both `min` and `max` of the neighbour labels. The
+  min is the next step; min == max at every node proves the current
+  labels are already a fixpoint (every closed neighbourhood shares one
+  label, and since labels only fall and stay inside the component, that
+  label is the component's min id). So no round runs merely to confirm
+  convergence: the proof rides the aggregate the next step needs anyway,
+  read by one count of nodes with min != max.
+- every round's frames end in `localCheckpoint` — iterative plans otherwise
+  grow a lineage Catalyst re-analyzes each round (planning cost explodes
+  by ~10 rounds) and re-executes from the source on failure.
+
+The driver barrier count is set by shuffle stages, not by checkpoint
+cadence: under AQE `localCheckpoint(eager=False)` is NOT lazy — the call
+itself finalizes the adaptive plan, running every shuffle-map stage
+beneath it as a job. A round therefore costs about (its shuffle stages +
+1) jobs, and the lever is fewer stages per round.
 
 At 100 TB the same loop holds: each round is a self-equi-join shuffle on
 node id (AQE-splittable), state is one (node, label) row per node, and
 round count is logarithmic in the largest cluster's diameter — dedup
-clusters are near-cliques, so 2-4 rounds in practice. This is the
-hash-to-min algorithm; GraphFrames' large-star/small-star is the same idea
-with a different edge rewrite.
+clusters are near-cliques, so 1-3 rounds in practice. GraphFrames'
+large-star/small-star is the same idea with a different edge rewrite.
 """
 
 from __future__ import annotations
@@ -28,9 +40,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_EDGE_COLS = ("u", "v", "__uv")
+
 
 def symmetrized_edges(
-    pairs: DataFrame, src: str, dst: str, carry: tuple[str, ...] = ()
+    pairs: DataFrame,
+    src: str,
+    dst: str,
+    carry: tuple[str, ...] = (),
+    self_loops: bool = False,
 ) -> DataFrame:
     """Both directions of an undirected pair list as (u, v [, *carry]) from
     ONE evaluation of the pair subtree. The union form —
@@ -40,12 +58,19 @@ def symmetrized_edges(
     twice (guide §2.4, duplicated subtrees). A 2-struct posexplode emits
     the same multiset of rows from a single evaluation; downstream
     distinct/groupBy/window consumers are order-insensitive, so results
-    are identical."""
-    both = F.explode(
-        F.array(
-            F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-            F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+    are identical. `self_loops` adds (a, a) and (b, b) from the same
+    explode: after `distinct`, the closed neighbourhood every node of the
+    pair list needs for connected components."""
+    clash = sorted(set(carry) & set(_EDGE_COLS))
+    if clash:
+        raise ValueError(
+            f"symmetrized_edges: carry column(s) {clash} collide with the "
+            f"reserved edge columns {list(_EDGE_COLS)}"
         )
+    a, b = F.col(src), F.col(dst)
+    ends = [(a, b), (b, a)] + ([(a, a), (b, b)] if self_loops else [])
+    both = F.explode(
+        F.array(*[F.struct(x.alias("u"), y.alias("v")) for x, y in ends])
     ).alias("__uv")
     return pairs.select(both, *[F.col(c) for c in carry]).select(
         F.col("__uv.u").alias("u"), F.col("__uv.v").alias("v"), *carry
@@ -59,58 +84,40 @@ def connected_components(
     max_iter: int = 20,
 ) -> DataFrame:
     """(node, component) for every node appearing in `pairs`; component is
-    the smallest node id reachable via pair edges (deterministic)."""
-    edges = (
-        symmetrized_edges(pairs, src, dst)
+    the smallest node id reachable via pair edges (deterministic). Raises
+    RuntimeError if the labels have not converged after `max_iter` rounds."""
+    nbr = (
+        symmetrized_edges(pairs, src, dst, self_loops=True)
         .distinct()
         .localCheckpoint(eager=False)
     )
-    labels = edges.select("u").distinct().withColumn("comp", F.col("u"))
-
-    # r12 re-measured the VERDICT-r11-#4 cadence idea (convergence count
-    # every SECOND round — valid because labels are monotone, a no-change
-    # application is a fixpoint proof at any cadence) and REJECTED it:
-    # interleaved A/B over the 4-query CC family at sf0.1, 5+8 pairs, set
-    # min ratio 1.12 / 1.08 (variant worse both runs). Root cause: the
-    # skipped round's checkpoint is what keeps `labels` materialized;
-    # deferring it makes round i+1 re-evaluate round i's two joins as an
-    # unmaterialized subtree under EACH of its several `labels` references
-    # — more work than the one count() barrier it saves (~2 of ~28 jobs).
+    step = nbr.groupBy("u").agg(F.min("v").alias("comp"))
     for _ in range(max_iter):
-        # Round 1: neighbor min — comp(u) := min(comp(u), min comp(v) over edges)
-        neigh = (
-            edges.join(labels.select(F.col("u").alias("v"), F.col("comp").alias("vc")), "v")
+        # Pointer jump: comp(u) := comp(comp(u)). Labels are node ids and
+        # comp(c) <= c for every node c (c is in its own N[c]), so the jump
+        # only lowers labels and every label finds its row (inner join).
+        labels = (
+            step.join(
+                step.select(F.col("u").alias("comp"), F.col("comp").alias("jc")),
+                "comp",
+            )
+            .select("u", F.col("jc").alias("comp"))
+            .localCheckpoint(eager=False)
+        )
+        agg = (
+            nbr.join(labels.select(F.col("u").alias("v"), F.col("comp").alias("vc")), "v")
             .groupBy("u")
-            .agg(F.min("vc").alias("nc"))
+            .agg(F.min("vc").alias("comp"), F.max("vc").alias("__hi"))
+            .localCheckpoint(eager=False)
         )
-        stepped = labels.join(neigh, "u", "left").select(
-            "u", F.least(F.col("comp"), F.coalesce(F.col("nc"), F.col("comp"))).alias("comp")
-        )
-        # Round 2: pointer jump — comp(u) := comp(comp(u)). Labels are node
-        # ids, so the label table maps a label to ITS label; one extra join
-        # halves the remaining propagation rounds.
-        jumped = stepped.join(
-            stepped.select(F.col("u").alias("comp"), F.col("comp").alias("jc")),
-            "comp",
-            "left",
-        ).select("u", F.least(F.col("comp"), F.coalesce(F.col("jc"), F.col("comp"))).alias("comp"))
-        # Convergence rides the same materialization: carry the previous
-        # label through the round and count differences on the checkpointed
-        # frame — no extra old-vs-new join job. The checkpoint is LAZY: the
-        # convergence count() right below is the round's single action and
-        # materializes it (an eager checkpoint here ran a second, redundant
-        # job per round — r11 A/B: 14.2 s -> 12.2 s over the 4 CC queries).
-        # Lazy is safe exactly because the count() is the sole consumer
-        # until materialization completes; the next round's joins then read
-        # the cached partitions.
-        new_labels = jumped.join(
-            labels.select("u", F.col("comp").alias("__prev")), "u"
-        ).localCheckpoint(eager=False)
-        changed = new_labels.where(F.col("comp") != F.col("__prev")).count()
-        labels = new_labels.select("u", "comp")
-        if changed == 0:
-            break
-    return labels.select(F.col("u").alias("node"), F.col("comp").alias("component"))
+        # min == max everywhere: `labels` is the fixpoint (module docstring)
+        if agg.where(F.col("comp") != F.col("__hi")).count() == 0:
+            return labels.select(F.col("u").alias("node"), F.col("comp").alias("component"))
+        step = agg.select("u", "comp")
+    raise RuntimeError(
+        f"connected_components: labels still changing after {max_iter} rounds; "
+        "raise max_iter for this graph"
+    )
 
 
 def dedup_keep_canonical(

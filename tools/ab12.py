@@ -22,7 +22,9 @@ from __future__ import annotations
 import argparse
 import os
 import statistics
+import sys
 import time
+import traceback
 
 
 def main() -> None:
@@ -39,9 +41,13 @@ def main() -> None:
     from quarkus_etl_spark.queries import all_query_callables
     from quarkus_etl_spark.session import get_spark
 
+    queries = all_query_callables()
+    unknown = [name for name in args.queries if name not in queries]
+    if unknown:
+        parser.error(f"unknown query name(s): {', '.join(unknown)}")
+
     spark = get_spark("ab12")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_query_callables()
 
     def materialize(df):
         df.write.format("noop").mode("overwrite").save()
@@ -77,10 +83,13 @@ def main() -> None:
     for side in ("base", "var"):
         set_side(side)
         for name in args.queries:
+            # a warm-up failure is not fatal (the timed pass re-raises it at
+            # the real SF), but it is reported, never swallowed
             try:
                 materialize(queries[name](spark, tiny))
             except Exception:  # noqa: BLE001
-                pass
+                print(f"warm-up {side}:{name} failed:", file=sys.stderr, flush=True)
+                traceback.print_exc()
 
     times: dict[tuple[str, str], list[float]] = {}
     for pair in range(args.pairs):
