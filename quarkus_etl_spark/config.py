@@ -12,13 +12,12 @@ Here a job is `{name, extract, write}` where:
   "DDL-as-job passthrough" path; it may reference the extract result as the
   view `etl_source`) or a `WriteTarget` for Spark's native sinks.
 
-Config can come from Python dicts, a JSON file, or a flat
-`.properties`-style file using the reference's own key scheme.
+Config can come from Python dicts or a flat `.properties`-style file using
+the reference's own key scheme.
 """
 
 from __future__ import annotations
 
-import json
 import re
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -75,10 +74,6 @@ def jobs_from_dicts(raw: list[dict]) -> list[EtlJob]:
         out.append(EtlJob(name=d["name"], extract=d["extract"], write=write,
                           depends_on=depends_on))
     return out
-
-
-def jobs_from_json(path: str | Path) -> list[EtlJob]:
-    return jobs_from_dicts(json.loads(Path(path).read_text())["jobs"])
 
 
 _PROP_RE = re.compile(r"^loader\.jobs\[(\d+)\]\.(name|extract|write)\s*=\s*(.*)$")

@@ -12,39 +12,44 @@ relative to the cluster.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame
 
-# Key carries the input-file TUPLE itself, not hash(files) (ADVICE r11):
-# a 64-bit hash of distinct file sets can in principle collide and serve a
-# stale routing scalar, and the tuples are small (fixture tables are a
-# handful of part files). Bounded: routing keys are one entry per distinct
-# (session, plan, files) triple — a long-lived session that keeps reading
-# new file sets evicts oldest-first at the cap instead of growing forever.
+# One memo for plan-ROUTING scalars (row counts, vector-dimensionality
+# probes, duplicate-existence probes): metadata that shapes the physical
+# plan, never row values that reach an output. Keyed on (tag, session,
+# analyzed-plan semantic hash, input-file tuple) — the file TUPLE itself,
+# not hash(files) (ADVICE r11): a 64-bit hash of distinct file sets can in
+# principle collide and serve a stale scalar, and the tuples are small.
+# Bounded LRU: a long-lived session that keeps reading new file sets evicts
+# the least recently used key at the cap instead of growing forever. The
+# lock guards the dict under JobRunner.run_dag threads; `compute` runs
+# outside it, so two threads missing the same key may both compute it
+# (same value) rather than serialize every probe job.
 _ROUTING_CACHE_MAX = 256
-_ROUTING_COUNT_CACHE: dict[tuple, int] = {}
-
-# Same cache discipline, generalized to other plan-ROUTING scalars (vector
-# dimensionality probes, duplicate-existence probes): metadata that shapes
-# the physical plan, never row values that reach an output. Keyed like
-# routing_count — (session, analyzed-plan semantic hash, input-file
-# tuple) — so an overwritten/appended table invalidates the entry.
-_ROUTING_META_CACHE: dict[tuple, object] = {}
-
-
-def _cache_put(cache: dict, key, value) -> None:
-    if len(cache) >= _ROUTING_CACHE_MAX:
-        cache.pop(next(iter(cache)))
-    cache[key] = value
+_ROUTING_CACHE: OrderedDict[tuple, object] = OrderedDict()
+_ROUTING_LOCK = threading.Lock()
 
 
 def routing_meta(df: DataFrame, tag: str, compute):
-    """Memoize a plan-routing scalar derived from `df` (r11 optimization:
-    the ANN operators re-ran a dim probe `first()` and a duplicate-probe
-    aggregate on every invocation — ~1.2 s per q_knn_graph_ann call at
-    sf0.1 — for answers that cannot change while the session, logical plan
-    and input files are all unchanged). Falls back to calling `compute`
-    uncached when the plan cannot be fingerprinted (Connect, API drift),
-    exactly like routing_count."""
+    """Memoize a plan-routing scalar `compute(df)` per (tag, session,
+    analyzed-plan semantic hash, input files). The ANN operators re-ran a
+    dim probe `first()` and a duplicate-probe aggregate on every
+    invocation — ~1.2 s per q_knn_graph_ann call at sf0.1 — for answers
+    that cannot change while the session, logical plan and input files
+    are all unchanged.
+
+    Key hygiene: the session component is catalog._session_key (NOT
+    applicationId, which spark.newSession() siblings share), and the file
+    tuple invalidates the entry when the table is overwritten or appended
+    under the same logical plan — overwrite/append always change the
+    part-file set, so a stale count can't silently keep routing a grown
+    corpus to the exhaustive plan. In-memory relations have no files and
+    key on the semantic hash alone (plans there are session-local and
+    immutable in practice). Falls back to calling `compute` uncached when
+    the plan cannot be fingerprinted (Connect, API drift)."""
     from ..catalog import _session_key
 
     try:
@@ -60,9 +65,30 @@ def routing_meta(df: DataFrame, tag: str, compute):
         )
     except Exception:  # pragma: no cover - Connect or API drift
         return compute(df)
-    if key not in _ROUTING_META_CACHE:
-        _cache_put(_ROUTING_META_CACHE, key, compute(df))
-    return _ROUTING_META_CACHE[key]
+    with _ROUTING_LOCK:
+        if key in _ROUTING_CACHE:
+            _ROUTING_CACHE.move_to_end(key)
+            return _ROUTING_CACHE[key]
+    value = compute(df)
+    with _ROUTING_LOCK:
+        _ROUTING_CACHE[key] = value
+        _ROUTING_CACHE.move_to_end(key)
+        while len(_ROUTING_CACHE) > _ROUTING_CACHE_MAX:
+            _ROUTING_CACHE.popitem(last=False)
+    return value
+
+
+def routing_count(df: DataFrame) -> int:
+    """Row count for size-based plan routing (exhaustive-vs-LSH thresholds,
+    auto plane sizing), memoized by routing_meta under the "count" tag.
+
+    On a raw parquet scan count() is a metadata-only action; on a derived
+    frame it executes the upstream plan — callers should route on the raw
+    input where possible, and the memo at least makes repeated routing
+    decisions over the same logical input (the common case: every dedup/
+    graph query re-derives the same corpus frame) pay once per session."""
+    return routing_meta(df, "count", lambda d: d.count())
+
 
 _route_logger = __import__("logging").getLogger("quarkus_etl_spark.routing")
 
@@ -83,46 +109,6 @@ def log_route(op: str, strategy: str, approximate: bool, detail: str = "") -> No
         )
     else:
         _route_logger.debug(msg)
-
-
-def routing_count(df: DataFrame) -> int:
-    """Row count for size-based plan routing (exhaustive-vs-LSH thresholds,
-    auto plane sizing), cached per (session, analyzed-plan semantic hash,
-    input-file fingerprint).
-
-    On a raw parquet scan count() is a metadata-only action; on a derived
-    frame it executes the upstream plan — callers should route on the raw
-    input where possible, and this cache at least makes repeated routing
-    decisions over the same logical input (the common case: every dedup/
-    graph query re-derives the same corpus frame) pay once per session.
-
-    Key hygiene: the session component is catalog._session_key (NOT
-    applicationId, which spark.newSession() siblings share), and the file
-    fingerprint invalidates the cached count when the table is overwritten
-    or appended under the same logical plan — overwrite/append always
-    change the part-file set, so a stale count can't silently keep routing
-    a grown corpus to the exhaustive plan. In-memory relations fingerprint
-    to () and fall back to semantic-hash-only keying (plans there are
-    session-local and immutable in practice)."""
-    from ..catalog import _session_key
-
-    try:
-        try:
-            files = tuple(sorted(df.inputFiles()))
-        except Exception:  # streaming/in-memory plans
-            files = ()
-        key = (
-            _session_key(df.sparkSession),
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-            files,
-        )
-    except Exception:  # pragma: no cover - Connect or API drift
-        return df.count()
-    n = _ROUTING_COUNT_CACHE.get(key)
-    if n is None:
-        n = df.count()
-        _cache_put(_ROUTING_COUNT_CACHE, key, n)
-    return n
 
 
 def materialize_once(df: DataFrame, eager: bool = True) -> DataFrame:

@@ -63,64 +63,116 @@ def test_registered_count_matches_survey_scale():
 
 
 def test_grading_queue_invariants():
-    """The driver grades ~50 queries in dict order per round; these
-    invariants keep that window pointed at fresh verdicts: no name sits in
-    both the re-grade front and the already-graded set (a _PREVIOUSLY_GRADED
-    entry wins priority and would silently eat the regrade), every queued
-    name really exists, and the queue front leads the emitted order."""
-    from quarkus_etl_spark.queries.base import (
-        _GRADE_FIRST,
-        _PREVIOUSLY_GRADED,
-        all_query_callables,
-    )
+    """The grader checks ~50 queries in dict order per round. On the
+    committed records and manifest, every registered query has a manifest
+    entry, the emitted order is the derived priority order, and the front
+    is exactly the four connected-components queries rewritten after their
+    r12 verdicts (since=12: no verdict describes their code yet)."""
+    from quarkus_etl_spark.queries.base import correctness_records, grading_priority, load_manifest
 
-    q = all_query_callables()
-    assert set(_GRADE_FIRST) & _PREVIOUSLY_GRADED == set()
-    assert set(_GRADE_FIRST) <= set(q)
-    assert _PREVIOUSLY_GRADED <= set(q)
-    assert len(_GRADE_FIRST) == len(set(_GRADE_FIRST))
-    names = list(q)
-    front = [n for n in _GRADE_FIRST if n not in _PREVIOUSLY_GRADED]
-    assert names[: len(front)] == front
+    records, manifest = correctness_records(), load_manifest()
+    names = list(all_query_callables())
+    assert set(names) <= set(manifest)
+    prio = [grading_priority(n, records, manifest) for n in names]
+    assert prio == sorted(prio)
+    cc = ["q_dedup_cluster", "q_dedup_canonical", "q_dedup_canonical_best", "q_dedup_soft"]
+    assert [n for n, p in zip(names, prio) if p[0] == 0] == cc == names[:4]
+    assert list(all_oracles())[:4] == cc
+
+
+def test_grading_order_fabricated_world(monkeypatch, tmp_path):
+    """Round 3 is the newest record. `drifted` was rewritten after its r2
+    pass (since=2), `failed` failed last, `fresh`/`rows_only` were never
+    graded, `stale`/`rows`/`current` hold conclusive verdicts on their
+    current code."""
+    import json
+
+    from quarkus_etl_spark.queries import base
+
+    ok = {"hash_match": True, "err": None}
+    records = {
+        1: {"stale": ok, "failed": ok, "rows": {"hash_match": None, "err": "no_oracle"}},
+        2: {"drifted": ok, "current": ok},
+        3: {"failed": {"hash_match": False, "err": None}},
+    }
+    manifest = {n: {"src": "s", "since": 2 if n == "drifted" else 0}
+                for n in ("drifted", "failed", "stale", "current", "rows")}
+    (tmp_path / "fp.json").write_text(json.dumps(manifest))
+    monkeypatch.setattr(base, "correctness_records", lambda: records)
+    monkeypatch.setattr(base, "MANIFEST", str(tmp_path / "fp.json"))
+    for n in ("fresh", "drifted", "failed", "stale", "current"):
+        monkeypatch.setitem(base.ORACLES, n, "SELECT 1")
+    registered = ["current", "stale", "rows_only", "fresh", "failed", "rows", "drifted"]
+    assert {n: base.grading_priority(n, records, manifest) for n in registered} == {
+        "drifted": (0, 0), "failed": (0, 0), "fresh": (1, 0), "rows_only": (2, 0),
+        "stale": (3, 1), "rows": (3, 1), "current": (3, 2),
+    }
+    # a name without a manifest entry counts as written in the newest round
+    assert base.grading_priority("stale", records, {}) == (0, 0)
+    order = list(base._grading_order(dict.fromkeys(registered)))
+    assert order == ["failed", "drifted", "fresh", "rows_only", "stale", "rows", "current"]
+    monkeypatch.setattr(base, "MANIFEST", str(tmp_path / "missing.json"))
+    assert list(base._grading_order(dict.fromkeys(registered))) == registered
+
+
+def test_fingerprint_write_sets_since_on_changed_entries():
+    """`--write` keeps `since` on an unchanged fingerprint and sets it to
+    the newest round on a changed or new one, which requeues the query."""
+    from tools.fingerprint import with_since
+
+    manifest = {"same": {"src": "a", "since": 4}, "changed": {"src": "a", "since": 4}}
+    current = {"same": {"src": "a"}, "changed": {"src": "DRIFTED"}, "new": {"src": "n"}}
+    assert with_since(current, manifest, 9) == {
+        "same": {"src": "a", "since": 4},
+        "changed": {"src": "DRIFTED", "since": 9},
+        "new": {"src": "n", "since": 9},
+    }
 
 
 def test_fingerprint_manifest_consistency():
-    """Regrade-queue automation (VERDICT r6 #3): every _PREVIOUSLY_GRADED
-    query's implementation source and oracle SQL must match the committed
-    fingerprint manifest frozen when it was graded. A mismatch means the
-    graded verdict no longer describes the code — move the query to
-    _GRADE_FIRST and regenerate with `python -m tools.fingerprint --write`.
-    (The plan-level part, which also catches shared-operator changes, is
-    checked by `python -m tools.fingerprint` in the round gate — it needs a
-    live session per query, too heavy for every pytest run.)"""
+    """Every registered query's implementation source and oracle SQL must
+    match the committed fingerprint manifest. A mismatch means the manifest
+    was not regenerated after a change: run `python -m tools.fingerprint
+    --write`, which also requeues the query for a fresh verdict. (The
+    plan-level part, which also catches shared-operator changes, is
+    checked by `python -m tools.fingerprint --check` — it needs a live
+    session per query, too heavy for every pytest run.)"""
     from tools.fingerprint import cheap_fingerprints, diff_against_manifest, load_manifest
 
     manifest = load_manifest()
     assert manifest, "tools/fingerprints.json missing — run tools.fingerprint --write"
-    current = cheap_fingerprints()
-    problems = [p for p in diff_against_manifest(current, manifest)
-                if "plan" not in p]
-    assert problems == []
+    assert diff_against_manifest(cheap_fingerprints(), manifest) == []
 
 
 def test_fingerprint_drift_detection_fires():
-    """The manifest gate must actually fail on drift: a previously-graded
-    name with a changed src/oracle/plan hash is reported; _GRADE_FIRST
-    names are exempt (already queued)."""
-    from quarkus_etl_spark.queries.base import _GRADE_FIRST, _PREVIOUSLY_GRADED
+    """The manifest gate must fail on drift of any part and on a missing
+    entry, and stay quiet on an unchanged entry (`since` is not a part)."""
     from tools.fingerprint import diff_against_manifest
 
-    graded = sorted(_PREVIOUSLY_GRADED - set(_GRADE_FIRST))[0]
-    queued = next(n for n in _GRADE_FIRST if n not in _PREVIOUSLY_GRADED)
-    manifest = {graded: {"src": "AA", "oracle": "BB", "plan": "CC"},
-                queued: {"src": "XX", "oracle": "YY", "plan": "ZZ"}}
-    current = {graded: {"src": "AA", "oracle": "BB", "plan": "DRIFTED"},
-               queued: {"src": "drifted", "oracle": "drifted", "plan": "drifted"}}
-    # fabricated-world diff: only the graded name's plan drift is reported
-    problems = [p for p in diff_against_manifest(current, manifest)
-                if p.startswith((graded, queued))]
-    assert any(p.startswith(f"{graded}: plan") for p in problems)
-    assert not any(p.startswith(queued) for p in problems)
+    manifest = {"q_a": {"src": "AA", "oracle": "BB", "plan": "CC", "since": 3},
+                "q_b": {"src": "AA", "oracle": "BB", "plan": "CC", "since": 0}}
+    current = {"q_a": {"src": "AA", "oracle": "BB", "plan": "DRIFTED"},
+               "q_b": {"src": "AA", "oracle": "BB", "plan": "CC"},
+               "q_c": {"src": "AA", "oracle": "BB", "plan": "CC"}}
+    problems = diff_against_manifest(current, manifest)
+    assert len(problems) == 2
+    assert problems[0].startswith("q_a: plan fingerprint drifted")
+    assert problems[1].startswith("q_c: no manifest entry")
+
+
+def test_plan_fingerprint_ignores_default_parallelism():
+    """ensure_parallelism repartitions to defaultParallelism (the host's
+    cores) and spark.range() splits into it, so that value is normalized
+    out; an explicit count is not."""
+    from tools.fingerprint import _norm_plan, _sha
+
+    plan = ("Join Inner\n:- Repartition {0}, true\n:  +- Relation [a#1] parquet\n"
+            "+- Range (0, 4, step=1, splits=Some({0}))\n")
+    at4 = _sha(_norm_plan(plan.format(4), "/sf", 4))
+    at32 = _sha(_norm_plan(plan.format(32), "/sf", 32))
+    assert at4 == at32
+    assert _sha(_norm_plan(plan.format(7), "/sf", 4)) != at4
+    assert _sha(_norm_plan(plan.format(7), "/sf", 32)) != at32
 
 
 def test_type_skew_manifest_is_frozen_and_wellformed():

@@ -455,3 +455,67 @@ def test_emb_kmeans_routes_to_pruned_above_k_threshold(spark, sf_dir, monkeypatc
         for r in q_emb_kmeans(spark, sf_dir).collect()
     }
     assert routed == baseline
+
+
+
+def _plan_stub(i: int):
+    """The slice of a DataFrame routing_meta keys on: no input files, a
+    fixed session key and semantic hash `i`."""
+    from types import SimpleNamespace as NS
+
+    analyzed = NS(analyzed=lambda: NS(semanticHash=lambda: i))
+    return NS(i=i, inputFiles=list, sparkSession=NS(_qes_session_key="stub"),
+              _jdf=NS(queryExecution=lambda: analyzed))
+
+
+@pytest.fixture
+def memo(monkeypatch):
+    """plans.tuning with an empty routing memo."""
+    from collections import OrderedDict
+
+    from quarkus_etl_spark.plans import tuning
+
+    monkeypatch.setattr(tuning, "_ROUTING_CACHE", OrderedDict())
+    return tuning
+
+
+def test_routing_memo_is_lru(memo, monkeypatch):
+    """A hit refreshes the key, so at the cap the least recently USED entry
+    is evicted, not the oldest insert."""
+    monkeypatch.setattr(memo, "_ROUTING_CACHE_MAX", 2)
+    calls = []
+    a, b, c = _plan_stub(1), _plan_stub(2), _plan_stub(3)
+
+    def get(df, tag="t"):
+        return memo.routing_meta(df, tag, lambda d: calls.append(d.i) or d.i * 10)
+
+    # the hit on `a` refreshes it, so inserting `c` evicts `b`
+    assert [get(s) for s in (a, b, a, c, a)] == [10, 20, 10, 30, 10]
+    assert calls == [1, 2, 3]
+    # `b` recomputes; routing_count's "count" tag is a key of its own
+    assert (get(b), get(a, "count")) == (20, 10)
+    assert calls == [1, 2, 3, 2, 1]
+
+
+def test_routing_memo_thread_stress(memo, monkeypatch):
+    """JobRunner.run_dag calls routing probes from several threads: with
+    more threads than cores and a tiny switch interval, every call returns
+    its own key's value and the memo stays within its cap."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    monkeypatch.setattr(memo, "_ROUTING_CACHE_MAX", 8)
+    stubs = [_plan_stub(i) for i in range(40)]
+
+    def worker(seed: int) -> bool:
+        picks = [stubs[(seed * 7 + j) % len(stubs)] for j in range(400)]
+        return all(memo.routing_meta(s, "t", lambda d: d.i * 10) == s.i * 10 for s in picks)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as ex:
+            assert all(ex.map(worker, range(16), timeout=60))
+    finally:
+        sys.setswitchinterval(old)
+    assert len(memo._ROUTING_CACHE) <= 8

@@ -1,36 +1,35 @@
-"""Query-implementation fingerprints: the regrade-queue automation
-(VERDICT r6 #3).
+"""Query-implementation fingerprints: the input of the derived grading
+queue (`queries.base.grading_priority`).
 
-Rounds 5 and 6 both caught changed-output queries still sitting in
-`_PREVIOUSLY_GRADED` only by human diligence. This tool freezes, per
-registered query, a fingerprint of everything that determines its graded
-output:
+This tool freezes, per registered query, a fingerprint of everything that
+determines its graded output:
 
 - **src**  — sha256 of the query function's docstring-stripped AST dump
   (direct implementation edits; cheap, no Spark);
 - **oracle** — sha256 of the DuckDB oracle SQL ('' for rows-only queries);
 - **plan** — sha256 of the NORMALIZED analyzed logical plan at sf0.001
-  (catches shared-operator changes the function source can't see —
-  r6's asof/cdc fixes are exactly this class). Plan strings are stable
-  across sessions once exprIds are normalized (probed; the manifest
-  regeneration itself re-proves it every round). Live-streaming queries
+  (catches shared-operator changes the function source can't see).
+  Session noise (exprIds, lambda counters, cache ids, pids, the fixture
+  and repo paths, the session's default parallelism) is normalized out,
+  so the hash is the same on any host. Live-streaming queries
   (q_stream_live_*) EXECUTE a stream when called and return a
   memory-sink scan, so their plan part is skipped — src+oracle still
   fingerprint them, and their semantics are pinned row-exact in
   tests/test_streaming.py.
 
-The committed manifest is `tools/fingerprints.json`. Enforcement:
+The committed manifest is `tools/fingerprints.json`. Each entry also
+carries `since`: the newest `CORRECTNESS_r*.json` round that existed when
+that fingerprint was first written, so only verdicts from later rounds
+describe the current code. `--write` keeps `since` on an unchanged entry
+and sets it to the newest round on a new or changed one — which is what
+requeues a changed query at the front of the grading order. Run `--write`
+after any change that moves a fingerprint; there is no separate requeue
+step.
 
-- tests/test_coverage.py checks the CHEAP parts (src+oracle) for every
-  `_PREVIOUSLY_GRADED` query on every pytest run;
-- `python -m tools.fingerprint --check` (a standing round gate in the
-  verify skill) additionally checks the plan part with a live session.
-
-A mismatch for a `_PREVIOUSLY_GRADED` name means: move the query into
-`_GRADE_FIRST`, then regenerate with `python -m tools.fingerprint --write`.
-`--write` refuses to overwrite a changed entry for a _PREVIOUSLY_GRADED
-name unless `--force` is given, so the manifest can't be silently
-refreshed past the queue discipline.
+Enforcement: tests/test_coverage.py checks the CHEAP parts (src+oracle)
+of every registered query on every pytest run; `python -m
+tools.fingerprint --check` also checks the plan part with a live session.
+Drift means the manifest was not regenerated after a change.
 """
 
 from __future__ import annotations
@@ -48,7 +47,14 @@ import textwrap
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-MANIFEST = os.path.join(REPO, "tools", "fingerprints.json")
+from quarkus_etl_spark.queries.base import (  # noqa: E402
+    MANIFEST,
+    ORACLES,
+    all_query_callables,
+    correctness_records,
+    load_manifest,
+)
+
 SF_DIR_DEFAULT = "/root/testdata/sf0.001"
 
 # Queries whose callable executes a live micro-batch stream and returns a
@@ -92,7 +98,7 @@ def src_fingerprint(fn) -> str:
     return _sha(ast.dump(tree))
 
 
-def _norm_plan(plan: str, sf_dir: str) -> str:
+def _norm_plan(plan: str, sf_dir: str, parallelism: int) -> str:
     plan = _LAMBDA_VAR.sub(r"\1_#", plan)
     plan = _EXPR_ID.sub("#", plan)
     plan = _CACHE_ID.sub("cache_", plan)
@@ -121,19 +127,28 @@ def _norm_plan(plan: str, sf_dir: str) -> str:
     plan = re.sub(
         rf"(\.scratch/[^/\s]*?)\.pid{os.getpid()}\b", r"\g<1>", plan
     )
+    # ensure_parallelism round-robins to the session's defaultParallelism,
+    # and spark.range() splits into it: the host's core count. Only that
+    # value, and only in those two node shapes, becomes a token; an
+    # explicit repartition(n) or range(..., numPartitions=n) with another
+    # n stays in the hash.
+    plan = re.sub(
+        rf"\bRepartition {parallelism}, true\b", "Repartition <P>, true", plan
+    )
+    plan = re.sub(
+        rf"(\bRange \([^()]*splits=Some\(){parallelism}\)", r"\g<1><P>)", plan
+    )
     return plan
 
 
 def plan_fingerprint(spark, sf_dir: str, fn) -> str:
     df = fn(spark, sf_dir)
     plan = df._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
-    return _sha(_norm_plan(plan, sf_dir))
+    return _sha(_norm_plan(plan, sf_dir, spark.sparkContext.defaultParallelism))
 
 
 def cheap_fingerprints() -> dict[str, dict[str, str]]:
     """src+oracle parts for every registered query. No Spark session."""
-    from quarkus_etl_spark.queries.base import ORACLES, all_query_callables
-
     qs = all_query_callables()
     return {
         name: {"src": src_fingerprint(fn), "oracle": _sha(ORACLES.get(name, ""))}
@@ -142,8 +157,6 @@ def cheap_fingerprints() -> dict[str, dict[str, str]]:
 
 
 def full_fingerprints(spark, sf_dir: str) -> dict[str, dict[str, str]]:
-    from quarkus_etl_spark.queries.base import all_query_callables
-
     out = cheap_fingerprints()
     qs = all_query_callables()
     for name, fn in qs.items():
@@ -153,55 +166,48 @@ def full_fingerprints(spark, sf_dir: str) -> dict[str, dict[str, str]]:
     return out
 
 
-def load_manifest() -> dict[str, dict[str, str]]:
-    try:
-        with open(MANIFEST) as fh:
-            return json.load(fh)
-    except OSError:
-        return {}
-
-
 def diff_against_manifest(
     current: dict[str, dict[str, str]], manifest: dict[str, dict[str, str]]
 ) -> list[str]:
-    """Human-readable drift list for PREVIOUSLY-GRADED names only: a
-    _GRADE_FIRST query is already queued for a fresh verdict, so its drift
-    is expected until the next manifest regeneration."""
-    from quarkus_etl_spark.queries.base import _GRADE_FIRST, _PREVIOUSLY_GRADED
-
+    """Human-readable drift list over every registered query and every
+    part `current` carries."""
     problems = []
-    for name in sorted(_PREVIOUSLY_GRADED):
-        if name in _GRADE_FIRST:
-            continue
-        cur, old = current.get(name), manifest.get(name)
-        if cur is None:
-            problems.append(f"{name}: in _PREVIOUSLY_GRADED but not registered")
-            continue
+    for name, cur in sorted(current.items()):
+        old = manifest.get(name)
         if old is None:
             problems.append(f"{name}: no manifest entry — regenerate (--write)")
             continue
         for part, v in cur.items():
-            if part in old and old[part] != v:
+            if old.get(part) != v:
                 problems.append(
-                    f"{name}: {part} fingerprint drifted — its driver verdict "
-                    "no longer matches this implementation; move it to "
-                    "_GRADE_FIRST and regenerate the manifest"
+                    f"{name}: {part} fingerprint drifted — regenerate with "
+                    "--write, which requeues it for a fresh verdict"
                 )
     return problems
+
+
+def with_since(
+    current: dict[str, dict[str, str]], manifest: dict[str, dict], newest: int
+) -> dict[str, dict]:
+    """`current` with each entry's `since`: kept from the manifest when the
+    fingerprint is unchanged, else `newest` (the newest grading round)."""
+    out = {}
+    for name, cur in current.items():
+        old = dict(manifest.get(name, {}))
+        since = old.pop("since", newest)
+        out[name] = {**cur, "since": since if old == cur else newest}
+    return out
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--check", action="store_true",
-                    help="verify the manifest and exit nonzero on drift — the "
-                         "default when --write is absent; the explicit flag "
-                         "exists so the round battery drives all three "
-                         "manifest gates (plan_audit / type_audit / "
-                         "fingerprint) with the same --check one-liner "
-                         "(VERDICT r9 #7)")
-    ap.add_argument("--write", action="store_true", help="regenerate manifest")
-    ap.add_argument("--force", action="store_true",
-                    help="allow --write to overwrite drifted previously-graded entries")
+                    help="compare every part of every registered query with "
+                         "the manifest; exit nonzero on drift (the default "
+                         "without --write)")
+    ap.add_argument("--write", action="store_true",
+                    help="regenerate the manifest; a new or changed entry gets "
+                         "since = the newest round, which requeues it")
     ap.add_argument("--cheap", action="store_true",
                     help="check only src+oracle parts (no Spark session)")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR_FP", SF_DIR_DEFAULT))
@@ -218,24 +224,15 @@ def main() -> int:
         current = full_fingerprints(spark, args.sf)
 
     manifest = load_manifest()
-    problems = diff_against_manifest(current, manifest)
-
     if args.write:
-        # a missing entry is what --write exists to create; only DRIFT of an
-        # existing previously-graded entry blocks regeneration
-        problems = [p for p in problems if "no manifest entry" not in p]
-        if problems and not args.force:
-            print("REFUSING --write: previously-graded entries drifted "
-                  "(re-queue them in _GRADE_FIRST first, or --force):")
-            for p in problems:
-                print("  " + p)
-            return 1
+        newest = max(correctness_records(), default=0)
         with open(MANIFEST, "w") as fh:
-            json.dump(current, fh, indent=1, sort_keys=True)
+            json.dump(with_since(current, manifest, newest), fh, indent=1, sort_keys=True)
             fh.write("\n")
         print(f"wrote {len(current)} fingerprints -> {MANIFEST}")
         return 0
 
+    problems = diff_against_manifest(current, manifest)
     if problems:
         print(f"FINGERPRINT DRIFT ({len(problems)}):")
         for p in problems:
