@@ -25,7 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import TABLES, load_table
+from ..catalog import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -82,13 +82,12 @@ _VIEWS_READY: set[tuple[str, str]] = set()
 def ensure_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all fixtures as temp views once per (session, sf_dir) so
     SQL-path queries (CTEs, subqueries, grouping sets) can run."""
-    from ..catalog import _session_key
+    from ..catalog import _session_key, register_views
 
     key = (_session_key(spark), sf_dir)
     if key in _VIEWS_READY:
         return
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    register_views(spark, sf_dir)
     _VIEWS_READY.add(key)
 
 

@@ -1002,6 +1002,38 @@ def test_lsh_oversized_duplicate_cluster_is_gated_not_buffered(spark):
     assert got == {(100001, 100002)}, got
 
 
+def test_simhash_oversized_duplicate_cluster_is_gated_not_buffered(spark):
+    """SimHash buckets go through the same size gate as the MinHash ones:
+    2000 identical fingerprints fill one bucket of every band and emit no
+    pairs, while a near pair (hamming 2) in the same corpus still pairs."""
+    from quarkus_etl_spark.operators.dedup import simhash_near_dup_pairs
+
+    mega = spark.range(2000).select(
+        F.col("id").alias("doc_id"),
+        F.lit("identical boilerplate page body repeated across mirrors").alias(
+            "text"
+        ),
+    )
+    body = (
+        "spark runs each stage of the physical plan as one task per partition"
+        " and the shuffle between stages moves rows to the executor that owns"
+        " their key "
+    )
+    pairish = spark.createDataFrame(
+        [
+            (100001, body + "quickly"),
+            (100002, body + "later"),
+            (100003, "completely unrelated text about spark aggregation plans"),
+        ],
+        "doc_id long, text string",
+    )
+    pairs = simhash_near_dup_pairs(
+        mega.unionByName(pairish), "doc_id", "text", max_hamming=3
+    ).collect()
+    got = {(r["id_a"], r["id_b"], r["hamming"]) for r in pairs}
+    assert got == {(100001, 100002, 2)}, got
+
+
 def test_merge_upsert_duplicate_update_rows_raise(spark):
     """ADVICE r7: the one-update-per-key CDC contract is enforced, not
     assumed — max_by picks an ARBITRARY winner among duplicate update

@@ -122,7 +122,7 @@ def test_knn_graph_routes_to_ann_above_threshold(spark, sf_dir, monkeypatch):
     from quarkus_etl_spark.queries.northstar_q import q_knn_graph
 
     exact_cols = q_knn_graph(spark, sf_dir).columns
-    monkeypatch.setenv("SPARK_GRAFT_EXACT_KNN_MAX_VECS", "1")
+    monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIRWISE_MAX_VECS", "1")
     routed = q_knn_graph(spark, sf_dir)
     assert routed.columns == exact_cols  # identical output contract
     rows = routed.collect()
@@ -346,6 +346,36 @@ def test_unknown_strategy_raises(spark, sf_dir, bad):
         near_dup_edges(
             d, "doc_id", "text", block_col="lang", threshold=0.7, strategy=bad
         ).collect()
+
+
+def test_ngram_jaccard_rejects_lsh(spark, sf_dir):
+    """ngram_jaccard_pairs is exact under every strategy: the recall-bounded
+    LSH plan is near_dup_edges' alone, even though both share one router."""
+    with pytest.raises(ValueError, match="strategy"):
+        ngram_jaccard_pairs(
+            _docs(spark, sf_dir), "doc_id", "text", block_col="lang",
+            threshold=0.7, strategy="lsh",
+        )
+
+
+def test_minhash_pairs_equal_lsh_edges_over_one_block(spark, sf_dir):
+    """minhash_near_dup_pairs is the LSH edge plan over word bigrams in a
+    single block: same pairs, same jaccard values."""
+    from pyspark.sql import functions as F
+
+    from quarkus_etl_spark.operators.dedup import minhash_near_dup_pairs
+
+    d = _docs(spark, sf_dir)
+    got = {tuple(r) for r in minhash_near_dup_pairs(d, "doc_id", "text", threshold=0.7).collect()}
+    want = {
+        tuple(r)
+        for r in near_dup_edges(
+            d.withColumn("one_block", F.lit("all")), "doc_id", "text",
+            block_col="one_block", threshold=0.7, strategy="lsh",
+        ).collect()
+    }
+    assert got == want
+    assert got
 
 
 def test_kmeans_pruned_assignment_exact_at_full_probe(spark, sf_dir):

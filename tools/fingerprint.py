@@ -10,8 +10,9 @@ determines its graded output:
 - **plan** — sha256 of the NORMALIZED analyzed logical plan at sf0.001
   (catches shared-operator changes the function source can't see).
   Session noise (exprIds, lambda counters, cache ids, pids, the fixture
-  and repo paths, the session's default parallelism) is normalized out,
-  so the hash is the same on any host. Live-streaming queries
+  and repo paths) is normalized out, and the session pins
+  `spark.default.parallelism` to PINNED_PARALLELISM, so the hash is the
+  same on any host. Live-streaming queries
   (q_stream_live_*) EXECUTE a stream when called and return a
   memory-sink scan, so their plan part is skipped — src+oracle still
   fingerprint them, and their semantics are pinned row-exact in
@@ -68,6 +69,15 @@ _CACHE_ID = re.compile(r"\bcache_[0-9a-f]+\b")
 # counter ("lambda x_483#"): how many lambdas were planned earlier in the
 # session leaks into the name — pure noise for fingerprinting
 _LAMBDA_VAR = re.compile(r"(?<=lambda )([A-Za-z]+)_\d+#")
+
+
+# The fingerprint session's spark.default.parallelism. ensure_parallelism
+# repartitions to the default and spark.range() splits into it, so a
+# session sized by the host's cores would put the core count in the plan;
+# the normal form tokenizes that value. Pinning it to a count that no query
+# asks for explicitly keeps every explicit count in the hash (an 8-core
+# host's default once hid an explicit numPartitions=8).
+PINNED_PARALLELISM = 5
 
 
 def _sha(s: str) -> str:
@@ -128,10 +138,9 @@ def _norm_plan(plan: str, sf_dir: str, parallelism: int) -> str:
         rf"(\.scratch/[^/\s]*?)\.pid{os.getpid()}\b", r"\g<1>", plan
     )
     # ensure_parallelism round-robins to the session's defaultParallelism,
-    # and spark.range() splits into it: the host's core count. Only that
-    # value, and only in those two node shapes, becomes a token; an
-    # explicit repartition(n) or range(..., numPartitions=n) with another
-    # n stays in the hash.
+    # and spark.range() splits into it. Only that value, and only in those
+    # two node shapes, becomes a token; an explicit repartition(n) or
+    # range(..., numPartitions=n) with another n stays in the hash.
     plan = re.sub(
         rf"\bRepartition {parallelism}, true\b", "Repartition <P>, true", plan
     )
@@ -141,10 +150,24 @@ def _norm_plan(plan: str, sf_dir: str, parallelism: int) -> str:
     return plan
 
 
+def fingerprint_session():
+    from quarkus_etl_spark.session import get_spark
+
+    return get_spark(
+        extra_conf={"spark.default.parallelism": str(PINNED_PARALLELISM)}
+    )
+
+
 def plan_fingerprint(spark, sf_dir: str, fn) -> str:
+    if spark.sparkContext.defaultParallelism != PINNED_PARALLELISM:
+        raise RuntimeError(
+            "plan fingerprints need a session with spark.default.parallelism="
+            f"{PINNED_PARALLELISM} (fingerprint_session()), got "
+            f"{spark.sparkContext.defaultParallelism}"
+        )
     df = fn(spark, sf_dir)
     plan = df._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
-    return _sha(_norm_plan(plan, sf_dir, spark.sparkContext.defaultParallelism))
+    return _sha(_norm_plan(plan, sf_dir, PINNED_PARALLELISM))
 
 
 def cheap_fingerprints() -> dict[str, dict[str, str]]:
@@ -218,10 +241,7 @@ def main() -> int:
     if args.cheap and not args.write:
         current = cheap_fingerprints()
     else:
-        from quarkus_etl_spark.session import get_spark
-
-        spark = get_spark()
-        current = full_fingerprints(spark, args.sf)
+        current = full_fingerprints(fingerprint_session(), args.sf)
 
     manifest = load_manifest()
     if args.write:
